@@ -27,10 +27,6 @@ def register_processor(name: str, fn: Callable[..., pa.RecordBatch]) -> None:
     _PROCESSORS[name] = fn
 
 
-def get_processor(name: str) -> Callable[..., pa.RecordBatch]:
-    return _PROCESSORS[name]
-
-
 def list_processors() -> list[str]:
     return sorted(_PROCESSORS)
 

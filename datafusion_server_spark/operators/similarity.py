@@ -463,8 +463,7 @@ def mmr_select(
     )
     sims_row = pairs.agg(
         F.expr(
-            "MAP_FROM_ENTRIES(COLLECT_LIST(STRUCT("
-            "CONCAT(CAST(a AS STRING), ':', CAST(b AS STRING)), sim))) AS sims"
+            "MAP_FROM_ENTRIES(COLLECT_LIST(STRUCT(STRUCT(a, b), sim))) AS sims"
         )
     )
     byrel = (
@@ -480,7 +479,7 @@ def mmr_select(
     if int(k) >= 2:
         pen = (
             "ARRAY_MAX(TRANSFORM(acc, p -> ELEMENT_AT(sims, "
-            "CONCAT(CAST(c.id AS STRING), ':', CAST(p.id AS STRING)))))"
+            "STRUCT(c.id AS a, p.id AS b))))"
         )
         scored = (
             "TRANSFORM(FILTER(cands, c -> NOT EXISTS(acc, p -> p.id = c.id)), "

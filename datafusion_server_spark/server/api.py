@@ -271,12 +271,7 @@ class Engine:
         from datafusion_server_spark.sources import jdbc
 
         try:
-            # registered JDBC views are tracked as UNTRACKED catalog
-            # state: the session manager never pools such a session
-            # (r14 warm pool — cleanliness is known without listTables)
-            sess.untracked_views.update(
-                jdbc.register_tables_from_sql(sess.spark, sql)
-            )
+            jdbc.register_tables_from_sql(sess.spark, sql)
         except ValueError:
             pass  # no namespaces configured; plain query
 

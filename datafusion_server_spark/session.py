@@ -2,11 +2,13 @@
 
 Rebuilds the reference's session layer (named, TTL-expiring DataFusion
 ``SessionContext``s — /root/reference/lib/src/context/session.rs:35-70 and
-session_manager.rs:26-37) on Spark: one ``SparkSession.newSession()`` per
-server session gives an isolated temp-view catalog over a shared
-SparkContext; a reaper thread enforces TTL (reference:
-lib/src/server/interval_worker.rs:7-33, default keep-alive 3600 s at
-lib/src/settings.rs:211).
+session_manager.rs:26-37) on Spark: every server session, stateless
+one-shots included, is a fresh ``SparkSession.newSession()`` over the
+shared SparkContext, never a reused one. That isolates temp views, temp
+functions and SQLConf per session; global temp views (``global_temp.*``)
+and the ``CACHE TABLE`` cache manager remain SparkContext-wide. A reaper
+thread enforces TTL (reference: lib/src/server/interval_worker.rs:7-33,
+default keep-alive 3600 s at lib/src/settings.rs:211).
 
 Scale notes (100 TB / 1000-executor design):
 - AQE on: runtime join-strategy switching, skew-join splitting, and
@@ -102,11 +104,6 @@ class ServerSession:
     created_at: float = field(default_factory=time.time)
     last_access: float = field(default_factory=time.time)
     data_sources: dict[str, dict] = field(default_factory=dict)
-    # temp views created OUTSIDE register()/remove() tracking (today:
-    # JDBC-namespace shims) — a session with any of these never returns
-    # to the manager's warm pool (r14), so recycling needs NO catalog
-    # enumeration (listTables costs as much as a fresh newSession).
-    untracked_views: set = field(default_factory=set)
 
     def touch(self) -> None:
         self.last_access = time.time()
@@ -179,19 +176,6 @@ class SessionManager:
         self._lock = threading.Lock()
         self._reaper: threading.Thread | None = None
         self._stop = threading.Event()
-        # r14 (verdict task 8, serving floor): bounded WARM POOL of
-        # recycled SparkSessions. Every create() pays newSession() +
-        # per-session conf + the dialect temp-function DDL; the one-shot
-        # REST path creates and destroys a session per request, so under
-        # 8/32-wide concurrency that setup serializes on the JVM. A
-        # closed session's SparkSession returns to the pool after a
-        # temp-view sweep (the ServerSession lifecycle — TTL, metrics,
-        # data-source cleanup — is untouched; only the underlying
-        # catalog object is reused). Bounded + env-tunable; 0 disables.
-        import os as _os
-
-        self._spark_pool: list[SparkSession] = []
-        self._pool_max = int(_os.environ.get("SPARK_GRAFT_SESSION_POOL", "16"))
         # r11 (serving-floor A/B): per-session SQLConf overrides —
         # newSession() initializes its SQLConf from the STATIC SparkConf,
         # so serving-tier knobs (AQE on + partition coalescing, measured
@@ -205,7 +189,11 @@ class SessionManager:
         if start_reaper:
             self.start_reaper()
 
-    def _closed(self, sess: "ServerSession") -> None:
+    def _end(self, sess: "ServerSession") -> None:
+        """Close one session already removed from the registry: drop its
+        data sources, then fire the ``on_close`` hook. The SparkSession
+        itself is discarded, never reused."""
+        sess.close()
         cb = self.on_close
         if cb is not None:
             try:
@@ -215,42 +203,21 @@ class SessionManager:
 
     def create(self, session_id: str | None = None, keep_alive_s: int = DEFAULT_KEEP_ALIVE_S) -> ServerSession:
         sid = session_id or uuid.uuid4().hex
-        with self._lock:
-            if sid in self._sessions:
-                raise ValueError(f"session already exists: {sid}")
-            spark = self._spark_pool.pop() if self._spark_pool else None
-        if spark is None:
-            spark = self._root.newSession()
-            for k, v in self.session_conf.items():
-                spark.conf.set(k, str(v))
-            # dialect-shim SQL functions (regexp_match first-match
-            # semantics etc.) live per temp-function catalog, i.e. per
-            # session — install on every create. Pooled sessions keep
-            # them (and their session_conf), which is why recycling
-            # skips this setup entirely.
-            from datafusion_server_spark.functions.dialect import register_session_functions
+        spark = self._root.newSession()
+        for k, v in self.session_conf.items():
+            spark.conf.set(k, str(v))
+        # dialect-shim SQL functions (regexp_match first-match
+        # semantics etc.) live per temp-function catalog, i.e. per
+        # session — install on every create.
+        from datafusion_server_spark.functions.dialect import register_session_functions
 
-            register_session_functions(spark)
+        register_session_functions(spark)
         sess = ServerSession(sid, spark, keep_alive_s)
         with self._lock:
             if sid in self._sessions:
                 raise ValueError(f"session already exists: {sid}")
             self._sessions[sid] = sess
         return sess
-
-    def _recycle(self, sess: "ServerSession") -> None:
-        """Return a closed session's SparkSession to the warm pool.
-        Catalog cleanliness is tracked PYTHON-SIDE (measured: a
-        ``listTables`` sweep costs as much as ``newSession`` itself, so
-        an enumerating reset would erase the pool's win): data sources
-        were already dropped by ``close()``; a session that ever
-        registered an untracked view (JDBC-namespace shims) is dropped,
-        never pooled dirty."""
-        if self._pool_max <= 0 or sess.untracked_views:
-            return
-        with self._lock:
-            if len(self._spark_pool) < self._pool_max:
-                self._spark_pool.append(sess.spark)
 
     def get(self, session_id: str) -> ServerSession:
         with self._lock:
@@ -277,9 +244,7 @@ class SessionManager:
             sess = self._sessions.pop(session_id, None)
         if sess is None:
             raise KeyError(f"no such session: {session_id}")
-        sess.close()
-        self._recycle(sess)
-        self._closed(sess)
+        self._end(sess)
 
     def reap(self) -> list[str]:
         """Drop expired sessions (reference reaper: interval_worker.rs:28-30)."""
@@ -287,9 +252,7 @@ class SessionManager:
             dead = [sid for sid, s in self._sessions.items() if s.expired]
             reaped = [(sid, self._sessions.pop(sid)) for sid in dead]
         for _, sess in reaped:
-            sess.close()
-            self._recycle(sess)
-            self._closed(sess)
+            self._end(sess)
         return [sid for sid, _ in reaped]
 
     def close_all(self) -> list[str]:
@@ -301,8 +264,7 @@ class SessionManager:
             drained = list(self._sessions.items())
             self._sessions.clear()
         for _, sess in drained:
-            sess.close()
-            self._closed(sess)
+            self._end(sess)
         return [sid for sid, _ in drained]
 
     def start_reaper(self) -> None:

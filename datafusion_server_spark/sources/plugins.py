@@ -38,10 +38,6 @@ def has_scheme(scheme: str) -> bool:
     return scheme.lower() in _CONNECTORS
 
 
-def list_connectors() -> list[str]:
-    return sorted(_CONNECTORS)
-
-
 def system_info() -> dict:
     # reference plugin_manager.rs:186-199 system_config kwargs
     return {"system_version": __version__, "system_log_level": "info"}

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -25,6 +26,79 @@ def test_session_isolation(spark):
         s2.spark.table("t").collect()
     mgr.delete("iso1")
     mgr.delete("iso2")
+
+
+# (state client A leaves behind, client B's probe of it): B's probe must
+# see the session default, never A's change
+_SESSION_STATE_LEAKS = {
+    "temp_view": (
+        "CREATE OR REPLACE TEMPORARY VIEW leak AS SELECT 42 AS secret",
+        "SELECT secret FROM leak",
+    ),
+    "sql_conf": (
+        "SET spark.sql.shuffle.partitions=3",
+        "SET spark.sql.shuffle.partitions",
+    ),
+    "temp_function": (
+        "CREATE OR REPLACE TEMPORARY FUNCTION regexp_match(s STRING, p STRING) "
+        "RETURNS ARRAY<STRING> RETURN array('hijacked')",
+        "SELECT regexp_match('abc', '(b)') AS m",
+    ),
+}
+_SESSION_DEFAULTS = {
+    "temp_view": None,  # the view does not resolve
+    "sql_conf": [{"key": "spark.sql.shuffle.partitions", "value": "8"}],
+    "temp_function": [{"m": ["b"]}],  # the dialect shim's first match
+}
+
+
+def _probe(run, sql: str):
+    """JSON rows of ``run(sql)``, or None when the statement fails."""
+    try:
+        body, _ = run(sql)
+    except Exception:
+        return None
+    return json.loads(body)
+
+
+@pytest.mark.parametrize("leak", sorted(_SESSION_STATE_LEAKS))
+def test_stateless_oneshot_isolation(spark, leak):
+    """Two consecutive stateless one-shots: whatever client A's SQL did
+    to its session (temp view, SQLConf, temp function) is invisible to
+    client B's one-shot."""
+    from datafusion_server_spark.server.api import Engine
+
+    engine = Engine(spark, start_reaper=False)
+    statement, probe = _SESSION_STATE_LEAKS[leak]
+
+    def oneshot(sql):
+        return engine.dataframe_query({"query": sql, "response": {"format": "json"}})
+
+    oneshot(statement)
+    assert _probe(oneshot, probe) == _SESSION_DEFAULTS[leak]
+
+
+@pytest.mark.parametrize("leak", sorted(_SESSION_STATE_LEAKS))
+def test_named_session_isolation(spark, leak):
+    """A named session that changed its state and was deleted leaves
+    nothing behind for the next session created."""
+    from datafusion_server_spark.server.api import Engine
+
+    engine = Engine(spark, start_reaper=False)
+    statement, probe = _SESSION_STATE_LEAKS[leak]
+    engine.session_create("iso_a", 600)
+    engine.session_query("iso_a", statement)
+    # the probe does see the change inside the session that made it
+    assert _probe(lambda sql: engine.session_query("iso_a", sql), probe) != (
+        _SESSION_DEFAULTS[leak]
+    )
+    engine.sessions.delete("iso_a")
+    engine.session_create("iso_b", 600)
+    try:
+        got = _probe(lambda sql: engine.session_query("iso_b", sql), probe)
+    finally:
+        engine.sessions.delete("iso_b")
+    assert got == _SESSION_DEFAULTS[leak]
 
 
 def test_session_ttl_reap(spark):
