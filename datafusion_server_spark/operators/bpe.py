@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datafusion_server_spark.operators.scale import ensure_fanout_parallelism
+from datafusion_server_spark.operators.scale import ensure_fanout_parallelism, sql_literal
 
 
 def _apply_merge_sql(syms: str, left: str, right: str) -> str:
@@ -169,9 +169,7 @@ def bpe_apply_merges(
     tq = text_col if text_col.isidentifier() else f"`{text_col}`"
     syms = "SPLIT(word, '')"
     for left, right in merges:
-        l = "'{}'".format(left.replace("'", "''"))
-        r = "'{}'".format(right.replace("'", "''"))
-        syms = _apply_merge_sql(syms, l, r)
+        syms = _apply_merge_sql(syms, sql_literal(left), sql_literal(right))
     return (
         df.selectExpr(
             f"{iq} AS id", f"POSEXPLODE(SPLIT({tq}, ' ')) AS (word_idx, word)"

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datafusion_server_spark.operators.scale import sql_literal
+
 # ShareGPT wire schema: [{"from": "...", "value": "..."}, ...]
 SHAREGPT_SCHEMA = "array<struct<from:string,value:string>>"
 
@@ -72,7 +74,7 @@ def prompt_response_pairs(
         "OVER (PARTITION BY conv_id ORDER BY turn_idx"
         " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
-    role_lit = "'{}'".format(assistant_role.replace("'", "''"))
+    role_lit = sql_literal(assistant_role)
     return (
         conv.selectExpr("conv_id", "POSEXPLODE(turns) AS (turn_idx, t)")
         .selectExpr(
@@ -110,7 +112,7 @@ def loss_mask_spans(
 
     Plan: one posexplode + one conv-keyed cumulative window over the
     rendered lengths."""
-    role_lit = "'{}'".format(assistant_role.replace("'", "''"))
+    role_lit = sql_literal(assistant_role)
     # offset of this turn's rendered text = sum of prior rendered
     # lengths + one newline separator per prior turn
     return (
@@ -153,7 +155,7 @@ def response_echo_rate(
     (conv, gram)-keyed self-join restricted to earlier turns, one
     distinct + count — all keyed by conversation, fan-out bounded by a
     single conversation's size."""
-    role_lit = "'{}'".format(assistant_role.replace("'", "''"))
+    role_lit = sql_literal(assistant_role)
     words = "FILTER(SPLIT(content, ' '), w -> w != '')"
     m = f"GREATEST(SIZE({words}) - {n - 1}, 0)"
     zipped = "ARRAYS_ZIP({})".format(

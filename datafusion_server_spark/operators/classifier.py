@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datafusion_server_spark.operators.scale import ensure_fanout_parallelism
+from datafusion_server_spark.operators.scale import ensure_fanout_parallelism, sql_literal
 from datafusion_server_spark.operators.similarity import SCALE
 
 _HEX_DIGITS = 15
@@ -246,9 +246,7 @@ def weak_label_vote(
         votes_arr = F.expr(
             "ARRAY("
             + ", ".join(
-                "STRUCT('{}' AS rule, CAST(({}) AS INT) AS v)".format(
-                    name.replace("'", "''"), v
-                )
+                "STRUCT({} AS rule, CAST(({}) AS INT) AS v)".format(sql_literal(name), v)
                 for name, v in rules
             )
             + ")"

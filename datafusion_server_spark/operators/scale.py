@@ -500,3 +500,20 @@ def quote_ident(name: str) -> str:
     escaping, so any column name round-trips; the Column-API path and
     this string path then fail/succeed identically."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(value: str, dialect: str = "spark") -> str:
+    """Quote a caller- or corpus-supplied string as a SQL string literal
+    for splicing into generated SQL text.
+
+    Spark's string literals treat ``\\`` as an escape character (unless
+    ``spark.sql.parser.escapedStringLiterals`` is set), so backslashes
+    are doubled as well as quotes, and any string round-trips:
+    ``spark.sql("SELECT " + sql_literal(s)).first()[0] == s``. DuckDB
+    literals (the oracle SQL) are standard SQL, where a backslash is an
+    ordinary character: ``dialect="duckdb"`` doubles quotes only."""
+    if dialect == "spark":
+        value = value.replace("\\", "\\\\")
+    elif dialect != "duckdb":
+        raise ValueError(f"unknown SQL dialect {dialect!r}")
+    return "'" + value.replace("'", "''") + "'"

@@ -17,6 +17,7 @@ from datafusion_server_spark.operators.scale import (
     ensure_fanout_parallelism,
     quote_ident,
     ranked_topk,
+    sql_literal,
 )
 
 # Tiny per-language stopword sets for the n-gram/stopword-voting heuristic.
@@ -75,7 +76,7 @@ def quality_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # (bare 0.4 parses as DECIMAL in SQL text).
     t = quote_ident(text_col)
     words = f"SPLIT({t}, ' ')"
-    stops = ", ".join("'" + s.replace("'", "''") + "'" for s in LANG_STOPWORDS["en"])
+    stops = ", ".join(sql_literal(s) for s in LANG_STOPWORDS["en"])
     n_words = f"CAST(SIZE({words}) AS BIGINT)"
     n_stop = f"CAST(SIZE(FILTER({words}, w -> w IN ({stops}))) AS BIGINT)"
     n_unique = f"CAST(SIZE(ARRAY_DISTINCT({words})) AS BIGINT)"

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from datafusion_server_spark import tables
 from datafusion_server_spark.operators import htmltext
 from datafusion_server_spark.operators.htmltext import ENTITIES
+from datafusion_server_spark.operators.scale import sql_literal
 from datafusion_server_spark.queries import df_query
 
 # synthesis template: literal strings interleaved with the doc-id and
@@ -66,14 +67,14 @@ def _sql_concat(parts: tuple) -> str:
         elif p is SRC:
             out.append("source")
         else:
-            out.append("'" + p.replace("'", "''") + "'")
+            out.append(sql_literal(p, dialect="duckdb"))
     return " || ".join(out)
 
 
 def _sql_unescape(expr: str) -> str:
     for ent, ch in ENTITIES:
-        out = ch.replace("'", "''")
-        expr = f"REPLACE({expr}, '{ent}', '{out}')"
+        expr = (f"REPLACE({expr}, {sql_literal(ent, dialect='duckdb')}, "
+                f"{sql_literal(ch, dialect='duckdb')})")
     return expr
 
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from datafusion_server_spark import tables
 from datafusion_server_spark.operators import embeddings, quality
+from datafusion_server_spark.operators.scale import sql_literal
 from datafusion_server_spark.queries import df_query, rrepr
 
 _STOP_LIST = ", ".join(f"'{w}'" for w in quality.STOPWORD_PROBE)
@@ -1467,7 +1468,7 @@ def _c4_line_sql(parts: tuple) -> str:
         elif p is _C4_TEXT:
             out.append("text")
         else:
-            out.append("'" + p.replace("'", "''") + "'")
+            out.append(sql_literal(p, dialect="duckdb"))
     return " || ".join(out)
 
 

@@ -29,6 +29,7 @@ from datafusion_server_spark.session import (
     ServerSession,
     SessionManager,
 )
+from datafusion_server_spark.sources import readers
 from datafusion_server_spark.sources import registry as source_registry
 
 
@@ -80,6 +81,12 @@ class Metrics:
     - ``session_contexts_total`` and
       ``session_context_duration_seconds`` (0.1s–1h buckets);
     - ``data_source_registrations_total{scheme,format}``.
+
+    Beyond the reference: ``data_source_schema_cache_total{result}``
+    (``hit``/``miss``) counts lookups in the process-wide parquet/ORC
+    schema cache of ``sources/readers.py``; it is read at exposition time
+    because the cache, like its counts, belongs to the process, not to
+    one Engine.
     """
 
     _counters: dict = field(default_factory=dict)
@@ -140,6 +147,8 @@ class Metrics:
                 k: (h.buckets, list(h.counts), h.sum, h.count)
                 for k, h in self._histograms.items()
             }
+        for result, n in readers.SCHEMA_CACHE.counts().items():
+            counters[("data_source_schema_cache_total", (("result", result),))] = n
         lines: list[str] = []
         seen: set[str] = set()
         for (name, labels), n in sorted(counters.items()):
@@ -394,8 +403,6 @@ class Engine:
         and registered."""
         sess = self.sessions.get(session_id)
         payload = {"format": fmt, "name": name, "location": ""}
-        from datafusion_server_spark.sources import readers
-
         suffix = {"csv": ".csv", "json": ".json", "ndjson": ".ndjson",
                   "parquet": ".parquet", "avro": ".avro"}[fmt]
         path = readers.stage_bytes(data, suffix)
@@ -461,11 +468,13 @@ class Engine:
         return self.sessions.get(session_id).remove(name)
 
     def refresh_data_source(self, session_id: str, name: str) -> None:
-        """Re-read the source (reference session_manager.rs:474-488)."""
+        """Re-read the source from its original request entry, options
+        and explicit schema included (reference session_manager.rs:474-488)."""
         sess = self.sessions.get(session_id)
-        info = sess.data_sources.get(name)
-        if not info:
+        if name not in sess.data_sources:
             raise KeyError(name)
-        payload = {"format": info["format"], "name": name, "location": info["location"]}
-        ds = source_registry.DataSource.from_json(payload)
+        ds = sess.source_requests.get(name)
+        if ds is None:
+            raise ValueError(f"data source {name!r} was not registered from a "
+                             f"dataSources request and cannot be re-read")
         source_registry.register(sess.spark, ds, session=sess)

@@ -27,8 +27,12 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import SparkSession
+
+if TYPE_CHECKING:
+    from datafusion_server_spark.sources.registry import DataSource
 
 DEFAULT_KEEP_ALIVE_S = 3600  # reference default: lib/src/settings.rs:211
 STATELESS_KEEP_ALIVE_S = 60  # reference: lib/src/response/handler/dataframe.rs:28-31
@@ -96,6 +100,9 @@ class ServerSession:
 
     Mirrors the reference ``Session`` (lib/src/context/session.rs:35-70):
     id, created timestamp, TTL, and the set of registered data sources.
+    ``source_requests`` keeps the parsed request entry of each source
+    registered from a ``dataSources`` request, so a refresh re-reads it
+    with the same options.
     """
 
     session_id: str
@@ -104,6 +111,7 @@ class ServerSession:
     created_at: float = field(default_factory=time.time)
     last_access: float = field(default_factory=time.time)
     data_sources: dict[str, dict] = field(default_factory=dict)
+    source_requests: dict[str, "DataSource"] = field(default_factory=dict)
 
     def touch(self) -> None:
         self.last_access = time.time()
@@ -135,6 +143,7 @@ class ServerSession:
                 pass
             self.spark.catalog.dropTempView(name)
             del self.data_sources[name]
+            self.source_requests.pop(name, None)
             return True
         return False
 

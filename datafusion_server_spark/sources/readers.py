@@ -1,5 +1,5 @@
-"""Buffered data-source readers: CSV / JSON array / ndJSON / Parquet from
-bytes, local paths, or HTTP(S).
+"""Buffered data-source readers: CSV / JSON array / ndJSON / Parquet / ORC
+from bytes, local paths, or HTTP(S).
 
 Reference behavior being rebuilt (file:line cited per reader):
 - CSV: header flag, delimiter, infer from first N rows
@@ -18,6 +18,23 @@ into memory (session.rs:248-253); our equivalent is ``persist()`` at
 registration time, which the registry applies. Only the JSONPath shim
 touches Python, and only on the (bounded, <=20 MB upload limit) document
 it extracts from.
+
+Schema cache: ``spark.read.parquet``/``orc`` infers the schema eagerly
+(for parquet, a one-task Spark job that reads the footer), and the
+stateless one-shot path registers its sources on every request. Both
+readers therefore go through :func:`_read_with_cached_schema`, which
+keeps one process-wide map from a file *version* to its inferred
+``StructType`` and hands a hit back as ``spark.read.schema(cached)``, so
+the read skips inference while the scan stays lazy with the same
+pushdown and pruning. The key is the format, the absolute path, the
+``st_size``/``st_mtime_ns``/``st_ino`` of one ``os.stat`` (a rewrite or an
+``os.replace`` at the same path is a new key) and the session's
+schema-affecting SQLConf values (e.g. ``spark.sql.parquet.binaryAsString``
+changes what a footer infers to). Only single local files are cached;
+directories and remote stores keep the uncached read, because Spark
+lists them anyway and fingerprinting them here would list them twice.
+The map is bounded (least recently used entries go first) and a failed
+inference is never stored.
 """
 
 from __future__ import annotations
@@ -25,10 +42,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import stat
 import tempfile
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from datafusion_server_spark.schema import to_struct_type
 from datafusion_server_spark.sources import jsonpath as jp
@@ -143,10 +165,107 @@ def read_json_array(spark: SparkSession, data: str | bytes, opts: ReadOptions) -
     return reader.json(path)
 
 
+SCHEMA_CACHE_MAX_ENTRIES = 1024
+# SQLConf entries that can change the schema a parquet/ORC footer infers
+# to (binaryAsString, int96AsTimestamp, nanosAsLong, inferTimestampNTZ,
+# the ORC reader impl, case sensitivity, ...).
+_SCHEMA_CONF_PREFIXES = ("spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.orc.")
+_SCHEMA_CONF_KEYS = ("spark.sql.caseSensitive", "spark.sql.timestampType")
+
+
+class SchemaCache:
+    """Bounded, thread-safe map from a file-version key to the schema Spark
+    inferred for it; the least recently used entry is evicted first."""
+
+    def __init__(self, max_entries: int = SCHEMA_CACHE_MAX_ENTRIES):
+        self.max_entries = max_entries
+        self._entries: OrderedDict[tuple, StructType] = OrderedDict()
+        self._counts = {"hit": 0, "miss": 0}
+        self._lock = threading.Lock()
+
+    def get(self, key: tuple) -> StructType | None:
+        with self._lock:
+            schema = self._entries.get(key)
+            self._counts["miss" if schema is None else "hit"] += 1
+            if schema is not None:
+                self._entries.move_to_end(key)
+            return schema
+
+    def put(self, key: tuple, schema: StructType) -> None:
+        with self._lock:
+            self._entries[key] = schema
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.max_entries:
+                self._entries.popitem(last=False)
+
+    def __len__(self) -> int:
+        with self._lock:
+            return len(self._entries)
+
+    def counts(self) -> dict[str, int]:
+        """Lookup outcomes so far: ``hit``/``miss``."""
+        with self._lock:
+            return dict(self._counts)
+
+
+SCHEMA_CACHE = SchemaCache()
+_json_mapper = None
+
+
+def _schema_conf(spark: SparkSession) -> tuple:
+    """The session's set SQLConf values that affect schema inference.
+
+    ``spark.conf.getAll`` converts the JVM map one py4j round trip per
+    entry (~20 ms for the ~30 entries of a server session on a 4-core
+    host); the same map as one Jackson JSON string costs ~0.3 ms."""
+    global _json_mapper
+    if _json_mapper is None:
+        _json_mapper = spark._jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    confs = json.loads(_json_mapper.writeValueAsString(spark.conf._jconf.getAllAsJava()))
+    return tuple(
+        sorted(
+            (k, v)
+            for k, v in confs.items()
+            if k.startswith(_SCHEMA_CONF_PREFIXES) or k in _SCHEMA_CONF_KEYS
+        )
+    )
+
+
+def _schema_cache_key(spark: SparkSession, fmt: str, location: str) -> tuple | None:
+    """The file-version key of a single local file, or None (uncached)."""
+    parsed = urlparse(location)
+    if parsed.scheme == "":
+        path = location
+    elif parsed.scheme == "file" and not (parsed.netloc or parsed.query or parsed.fragment):
+        path = parsed.path
+    else:
+        return None
+    path = os.path.abspath(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return fmt, path, st.st_size, st.st_mtime_ns, st.st_ino, _schema_conf(spark)
+
+
+def _read_with_cached_schema(spark: SparkSession, fmt: str, location: str) -> DataFrame:
+    key = _schema_cache_key(spark, fmt, location)
+    if key is None:
+        return spark.read.format(fmt).load(location)
+    schema = SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).format(fmt).load(location)
+    df = spark.read.format(fmt).load(location)  # raises before anything is stored
+    SCHEMA_CACHE.put(key, df.schema)
+    return df
+
+
 def read_parquet(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions) -> DataFrame:
     if isinstance(path_or_bytes, bytes):
         path_or_bytes = stage_bytes(path_or_bytes, ".parquet")
-    return spark.read.parquet(path_or_bytes)
+    return _read_with_cached_schema(spark, "parquet", path_or_bytes)
 
 
 def read_orc(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions) -> DataFrame:
@@ -155,4 +274,4 @@ def read_orc(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions)
     parquet — predicate pushdown, column pruning, vectorized read)."""
     if isinstance(path_or_bytes, bytes):
         path_or_bytes = stage_bytes(path_or_bytes, ".orc")
-    return spark.read.orc(path_or_bytes)
+    return _read_with_cached_schema(spark, "orc", path_or_bytes)

@@ -265,4 +265,5 @@ def register(spark: SparkSession, ds: DataSource, *, session=None) -> DataFrame:
     if session is not None:
         session.data_sources[ds.name] = {"format": ds.format, "location": ds.location,
                                          "cached": eager}
+        session.source_requests[ds.name] = ds
     return df

@@ -117,3 +117,22 @@ def test_apply_frozen_merges_matches_training_segmentation(spark, sf_dir):
     rows = {r.word: tuple(r.syms) for r in bpe.bpe_apply_merges(new, "text", "doc_id", mlist).collect()}
     assert rows["zzz"] == ("z", "z", "z") or len(rows["zzz"]) <= 3
     assert all(len(s) >= 1 for s in rows.values())
+
+
+def test_apply_merges_with_backslash_tokens(spark):
+    """Merge tokens come from the corpus and are spliced into generated
+    SQL as literals: a backslash must survive as itself, not start an
+    escape sequence (``\\t`` a tab, ``\\'`` a quote)."""
+    merges = [("\\", "t"), ("\\", "'"), ("a", "\\t")]
+    docs = spark.createDataFrame(
+        [(1, "a\\tb x\\'y \\\\")], "doc_id bigint, text string"
+    )
+    rows = {
+        r.word: tuple(r.syms)
+        for r in bpe.bpe_apply_merges(docs, "text", "doc_id", merges).collect()
+    }
+    assert rows == {
+        "a\\tb": ("a\\t", "b"),
+        "x\\'y": ("x", "\\'", "y"),
+        "\\\\": ("\\", "\\"),
+    }

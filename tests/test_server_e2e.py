@@ -77,6 +77,42 @@ def test_metrics_histogram_parity(base_url, tmp_path, engine):
     assert "deadbeef" not in text and "another" not in text
 
 
+def _counter(text: str, series: str) -> int:
+    for line in text.splitlines():
+        if line.startswith(series + " "):
+            return int(line.split()[-1])
+    return 0
+
+
+def test_schema_cache_metrics(base_url, tmp_path):
+    """Two identical one-shots over a fresh parquet file: the first
+    registration misses the schema cache, the second hits it."""
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "sc.parquet")
+    pq.write_table(pa.table({"k": [1, 2, 3], "g": ["a", "b", "a"]}), p)
+    payload = {
+        "dataSources": [{"format": "parquet", "name": "sc", "location": p}],
+        "query": "SELECT g, COUNT(*) AS n FROM sc GROUP BY g ORDER BY g",
+    }
+    hit = 'data_source_schema_cache_total{result="hit"}'
+    miss = 'data_source_schema_cache_total{result="miss"}'
+    text = requests.get(f"{base_url}/metrics").text
+    assert "# TYPE data_source_schema_cache_total counter" in text
+    counts = [(_counter(text, hit), _counter(text, miss))]
+    for _ in range(2):
+        r = requests.post(f"{base_url}/dataframe/query", json=payload)
+        assert r.status_code == 200, r.text
+        assert r.json() == [{"g": "a", "n": 2}, {"g": "b", "n": 1}]
+        text = requests.get(f"{base_url}/metrics").text
+        counts.append((_counter(text, hit), _counter(text, miss)))
+    (h0, m0), (h1, m1), (h2, m2) = counts
+    assert (h1 - h0, m1 - m0) == (0, 1)
+    assert (h2 - h1, m2 - m1) == (1, 0)
+    # the reference-parity series are still there under their own names
+    assert 'data_source_registrations_total{format="parquet",scheme="file"}' in text
+
+
 def test_stateless_dataframe_query(base_url, tmp_path):
     p = tmp_path / "s.csv"
     p.write_bytes(CSV)

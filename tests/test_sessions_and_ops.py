@@ -569,7 +569,60 @@ def test_engine_refresh(spark, tmp_path):
     p.write_bytes(b"a\n1\n2\n")
     engine.refresh_data_source("rf", "rt")
     assert sess.spark.table("rt").count() == 2
+    # a parquet rewrite that changes the schema: refresh goes through the
+    # schema cache and must see the new file version, not the cached one
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pp = str(tmp_path / "r.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), pp)
+    engine.session_add_datasource(
+        "rf", {"format": "parquet", "name": "rp", "location": pp}
+    )
+    assert sess.spark.table("rp").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), pp + ".new")
+    os.replace(pp + ".new", pp)
+    engine.refresh_data_source("rf", "rp")
+    assert sess.spark.table("rp").columns == ["a", "b"]
+    assert sorted(tuple(r) for r in sess.spark.table("rp").collect()) == [
+        (1, "x"), (2, "y"), (3, "z")
+    ]
     engine.sessions.delete("rf")
+
+
+def test_engine_refresh_keeps_source_options(spark, tmp_path):
+    """Refresh re-registers from the original request entry: a CSV with a
+    custom delimiter, no header row and an explicit schema keeps all three,
+    and the session detail keeps its shape."""
+    from datafusion_server_spark.server.api import Engine
+
+    engine = Engine(spark, start_reaper=False)
+    engine.session_create("rfo", 600)
+    p = tmp_path / "o.csv"
+    p.write_bytes(b"1;x\n2;y\n")
+    engine.session_add_datasource("rfo", [
+        {"format": "csv", "name": "plain", "location": str(p),
+         "options": {"delimiter": ";", "hasHeader": False}},
+        {"format": "csv", "name": "typed", "location": str(p),
+         "options": {"delimiter": ";", "hasHeader": False},
+         "schema": [{"name": "k", "dataType": "Int64"},
+                    {"name": "v", "dataType": "String"}]},
+    ])
+    sess = engine.sessions.get("rfo")
+    before = engine.session_detail("rfo")
+    p.write_bytes(b"1;x\n2;y\n3;z\n")
+    for name in ("plain", "typed"):
+        engine.refresh_data_source("rfo", name)
+    assert sess.spark.table("plain").columns == ["_c0", "_c1"]
+    assert sess.spark.table("plain").count() == 3
+    rows = sess.spark.table("typed").orderBy("k").collect()
+    assert [(r.k, r.v) for r in rows] == [(1, "x"), (2, "y"), (3, "z")]
+    after = engine.session_detail("rfo")
+    assert after["dataSources"] == before["dataSources"]
+    assert set(after["dataSources"]["typed"]) == {"format", "location", "cached", "schema"}
+    engine.sessions.delete("rfo")
 
 
 def test_insert_into_session_view(spark, tmp_path):
